@@ -121,7 +121,7 @@ def merge_parquet(
     keys: list[str],
     partition_col: str | None = None,
     on_duplicate_source: str = "error",
-) -> None:
+) -> list | None:
     """Pure-Spark keyed MERGE with whenMatchedUpdateAll /
     whenNotMatchedInsertAll semantics over a parquet directory.
 
@@ -136,6 +136,9 @@ def merge_parquet(
     for callers that explicitly want last-writer-undefined semantics;
     "unique_by_construction" skips the check job for sources that are
     key-unique by PLAN SHAPE (see :func:`merge`).
+
+    Returns what :func:`merge` returns: the touched partition values
+    (None past the cap) when ``partition_col`` is given, else None.
     """
     if on_duplicate_source == "error":
         check_source_unique(source, keys)
@@ -143,12 +146,13 @@ def merge_parquet(
         source = source.dropDuplicates(keys)
     elif on_duplicate_source != "unique_by_construction":
         raise ValueError(f"unknown on_duplicate_source={on_duplicate_source!r}")
+    parts = enumerate_partitions(source, partition_col) if partition_col else None
     if not os.path.exists(target_path):
         writer = source.write.mode("overwrite")
         if partition_col:
             writer = writer.partitionBy(partition_col)
         writer.parquet(target_path)
-        return
+        return parts
 
     def _stable_order(target: DataFrame, merged: DataFrame) -> DataFrame:
         """Keep the TABLE's column order across merge generations: the
@@ -162,7 +166,6 @@ def merge_parquet(
         return merged.select(cols)
 
     if partition_col:
-        parts = enumerate_partitions(source, partition_col)
         target = spark.read.parquet(target_path)
         if parts is not None:
             # static partition pruning via the literal list (metadata-only)
@@ -186,7 +189,7 @@ def merge_parquet(
         ).repartition(partition_col)
         with _overwrite_conf(spark, "dynamic"):
             merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
-        return
+        return parts
 
     target = spark.read.parquet(target_path)
     kept = target.join(source.select(keys), keys, "left_anti")
@@ -200,6 +203,7 @@ def merge_parquet(
     os.rename(target_path, old)
     os.rename(tmp, target_path)
     shutil.rmtree(old)
+    return None
 
 
 def replace_where(
@@ -260,7 +264,7 @@ def merge(
     keys: list[str],
     partition_col: str | None = None,
     on_duplicate_source: str = "error",
-) -> None:
+) -> list | None:
     """Dispatch: Delta when available, parquet fallback otherwise. The
     source-uniqueness contract is enforced on BOTH branches: Delta's own
     multi-match error fires only for duplicate keys that hit existing
@@ -276,7 +280,13 @@ def merge(
     exactly the merge keys (gold KPI refreshes, audit counts). The
     caller is asserting a structural fact, not hoping; anything
     weaker keeps the default check (the r8 q37 lesson: 'happens to be
-    unique at this SF' is not by-construction)."""
+    unique at this SF' is not by-construction).
+
+    With ``partition_col``, returns the partition values the source
+    touched — one bounded :func:`enumerate_partitions`, None past the
+    cap — so a caller scoping a follow-up refresh reuses the list the
+    MERGE pruned with instead of enumerating the source a second time.
+    Without it, returns None."""
     if delta_available():
         if on_duplicate_source == "error":
             check_source_unique(source, keys)
@@ -287,7 +297,7 @@ def merge(
                 f"unknown on_duplicate_source={on_duplicate_source!r}"
             )
         merge_delta(spark, target_path, source, keys)
-    else:
-        merge_parquet(
-            spark, target_path, source, keys, partition_col, on_duplicate_source
-        )
+        return enumerate_partitions(source, partition_col) if partition_col else None
+    return merge_parquet(
+        spark, target_path, source, keys, partition_col, on_duplicate_source
+    )

@@ -14,6 +14,12 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 - shuffle partitions default to a small local value but MUST be raised
   (or left to AQE's coalescing from a high initial value) on a real
   cluster; ``build_session`` takes it as a parameter for that reason.
+- **Generated-class cache sized to the working set**
+  (``spark.sql.codegen.cache.maxEntries``, see SCALING.md). This conf is
+  STATIC and Spark reads it once per JVM, when code generation first
+  runs: it takes effect only in the first session a JVM builds. A later
+  ``build_session`` in the same JVM (or one made after a vanilla session
+  has already run a query) keeps the size the first one fixed.
 """
 
 from __future__ import annotations
@@ -24,6 +30,15 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+# Spark's generated-class cache (spark.sql.codegen.cache.maxEntries)
+# defaults to 100 entries, fewer than one headline round uses, so every
+# round recompiled its classes in Janino and re-JITted them. Distinct
+# classes measured in one session (4-vCPU box, a 100,000-entry cap, the
+# JVM's CodegenMetrics compile counter): a warm-up plus timed round of
+# the 12 bench.HEADLINE queries at sf0.02, 232; four medallion cycles
+# of the stream_trickle workload, 295; all 50 catalog() queries at
+# sf0.01, 1,384. The cap is twice the largest, rounded up.
+CODEGEN_CACHE_ENTRIES = 3000
 
 
 def build_session(
@@ -51,6 +66,8 @@ def build_session(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # static conf: fixed by the JVM's first session (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -113,13 +113,13 @@ def start_streaming_kpis(
         try:
             if enriched.limit(1).count() == 0:
                 return
-            upsert.merge(
+            # the MERGE returns its bounded enumeration (r3 VERDICT watch
+            # item): None past the cap → recompute gold over all silver
+            # dates (full refresh)
+            parts = upsert.merge(
                 spark, silver_path, enriched,
                 keys=["order_id", "product_id"], partition_col="order_date",
             )
-            # bounded enumeration (r3 VERDICT watch item): None past the
-            # cap → recompute gold over all silver dates (full refresh)
-            parts = upsert.enumerate_partitions(enriched, "order_date")
             silver = spark.read.parquet(silver_path)
             if parts is not None:
                 silver = silver.filter(

@@ -290,27 +290,28 @@ class MedallionPipeline:
         enriched = parts_frames[0]
         for extra in parts_frames[1:]:
             enriched = enriched.unionByName(extra)
-        # the enriched frame is consumed by THREE actions per cycle
-        # (partition enumeration, the MERGE's source-uniqueness check,
-        # the MERGE write itself) — persist so the joins + dedup window
-        # run once, not three times (r9 ADVICE). All three actions
-        # complete before the staging swaps below, so a cache-miss
-        # recompute can never observe a swapped directory.
+        # the enriched frame is consumed by THREE actions per cycle, all
+        # inside the MERGE (the source-uniqueness check, the partition
+        # enumeration, the write itself) — persist so the joins + dedup
+        # window run once, not three times (r9 ADVICE). All three
+        # actions complete before the staging swaps below, so a
+        # cache-miss recompute can never observe a swapped directory.
         enriched = enriched.persist()
 
-        # bounded enumeration (r3 VERDICT watch item): a normal release
-        # touches a few dates; a historical backfill past the cap returns
-        # None and the gold refresh degrades to a full recompute — the
-        # right plan anyway when most partitions are being rewritten
-        parts = upsert.enumerate_partitions(enriched, "order_date")
-        dates = None if parts is None else [str(v) for v in parts]
-        upsert.merge(
+        # the MERGE returns the order_dates it touched — ONE bounded
+        # enumeration per cycle (r3 VERDICT watch item): a normal
+        # release touches a few dates; a historical backfill past the
+        # cap returns None and the gold refresh degrades to a full
+        # recompute — the right plan anyway when most partitions are
+        # being rewritten
+        parts = upsert.merge(
             self.spark,
             self._path("silver", "enriched"),
             enriched,
             keys=list(schemas.ENRICHED_MERGE_KEYS),
             partition_col=schemas.ENRICHED_PARTITION_COLUMN,
         )
+        dates = None if parts is None else [str(v) for v in parts]
 
         # drop released groups from staging (orders + items); products are
         # a dimension and stay (other pending groups may reference them).
@@ -454,8 +455,10 @@ class MedallionPipeline:
         appended to a _meta table instead of ad-hoc S3 JSON. A NULL
         released_dates array records a backfill-scale (full-refresh)
         cycle."""
+        # one partition → one part file per cycle (a default-parallelism
+        # range writes empty part files beside the row)
         (
-            self.spark.range(1)
+            self.spark.range(1, numPartitions=1)
             .select(
                 F.uuid().alias("cycle_id"),
                 F.current_timestamp().alias("completed_at"),

@@ -607,6 +607,45 @@ def test_process_restart_and_many_files(spark, tmp_path):
     assert sorted(map(tuple, pipe2.silver().collect())) == before
 
 
+def test_cycle_enumerates_dates_once_and_records_one_file(
+    spark, tmp_path, monkeypatch
+):
+    """A releasing cycle enumerates the touched order_dates ONCE: the
+    silver MERGE prunes with the list and returns it for the gold
+    refresh. The cycle audit appends one part file per cycle."""
+    from lab6_real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
+        upsert,
+    )
+
+    calls = []
+    real = upsert.enumerate_partitions
+
+    def counting(df, col, cap=None):
+        calls.append(col)
+        return real(df, col, cap)
+
+    monkeypatch.setattr(upsert, "enumerate_partitions", counting)
+    root = str(tmp_path)
+    pipe = MedallionPipeline(spark, root)
+    _drop(root, "products", "p1.csv", PRODUCT_HEADER,
+          ["p1,sku1,5.0,cat_a,widget,acme,12.0,d1"])
+    per_cycle = []
+    for k, day in enumerate(("2024-03-01", "2024-03-02")):
+        ts = f"{day}T10:00:00"
+        _drop(root, "orders", f"o{k}.csv", ORDER_HEADER, [f"o{k},u{k},delivered,{ts},,,,1"])
+        _drop(root, "order_items", f"i{k}.csv", ITEM_HEADER,
+              [f"i{k},o{k},u{k},p1,delivered,{ts},,,,10.0"])
+        before = len(calls)
+        assert pipe.run_cycle() == [day]
+        per_cycle.append(len(calls) - before)
+    # cycle 1 creates silver, cycle 2 merges into it: one list each
+    assert per_cycle == [1, 1]
+
+    cycles = os.path.join(root, "_meta", "cycles")
+    assert len([f for f in os.listdir(cycles) if f.startswith("part-")]) == 2
+    assert pipe.cycle_history().count() == 2
+
+
 def test_kv_sink_batching_and_retry(spark):
     """Reference S8 contract (transform.py:226-257): 25 items/request,
     retried with backoff; transient failures recover."""
